@@ -1,20 +1,25 @@
 """Benchmark harness: runs the headline queries at SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+one JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...}, then a short summary line.
 
 Results are materialized with the noop sink (full execution, no
 driver-side collect) so timings measure the distributed plan, not
-row transfer to the driver.
+row transfer to the driver. Each rep's host CPU steal is read from
+/proc/stat; a query's time is its fastest rep with at most 1 % steal,
+and a run with any query lacking such a rep is poisoned.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
 import sys
 import time
+
+from perfbench.host import cpu_ticks, steal_share
 
 
 # Headline set: one per operator family (scan+agg, multi-join, window,
@@ -238,146 +243,62 @@ HEADLINE = [
 ]
 
 
-# Host-steal probe (r12, VERDICT r11 item #1a). BASELINE.md's r11
-# characterization: this box suffers INTERMITTENT CPU STEAL — a fixed
-# 2048x4096x2048 float32 numpy matmul swings 0.095 -> 1.06 s (11x)
-# across back-to-back reps with zero local load, which poisoned the
-# r11 graded sweep (mm_image_features_jpeg read 15.13 s official vs
-# 1.34 s clean on identical code). The probe re-runs that exact
-# matmul between query segments and records every reading into the
-# artifact, so a poisoned sweep is detectable from the artifact
-# itself instead of by manual forensics.
-_PROBE_CLEAN_SEC = float(os.environ.get("SPARK_GRAFT_PROBE_CLEAN", "0.095"))
-_PROBE_POISON_RATIO = float(os.environ.get("SPARK_GRAFT_PROBE_RATIO", "2.0"))
-#: The per-query quick probe gets a LOOSER ratio than the segment
-#: probe: residual JVM activity right after a query inflates a ~30 ms
-#: matmul 2-3x even on a quiet host (measured), while genuine steal
-#: windows read 10-30x — 4x separates the two populations cleanly.
-_QPROBE_RATIO = float(os.environ.get("SPARK_GRAFT_QPROBE_RATIO", "4.0"))
+#: A rep is clean when at most this share of host CPU time went to other
+#: virtual machines while it ran (steal ticks in /proc/stat); the bound
+#: perfbench uses for its passes. Steal only ever inflates a wall time.
+STEAL_CLEAN = 0.01
+#: Back-to-back reps per query: rep 1 pays the whole-stage-codegen
+#: compile for the query's plan, later reps hit the codegen cache.
+#: Separating reps by a full pass would let the (100-entry) codegen
+#: cache evict the entry, and every rep would pay the compile.
+REPS = 3
+#: Further reps for a query none of whose first REPS reps was clean.
+EXTRA_REPS = 3
+#: Queries per Spark session (see main).
+RECYCLE = 50
+#: The committed artifact every cross-round comparison anchors on.
+OFFICIAL = "BENCH_LOCAL.json"
 
 
-def _steal_probe(reps: int = 3) -> float:
-    """Best-of-`reps` wall seconds for the characterized fixed matmul.
-
-    min-of-3 answers "is the host stealing RIGHT NOW": a momentary
-    scheduler blip loses to the other two reps, a genuine steal window
-    (seconds long per BASELINE.md) elevates all three.
-    """
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.standard_normal((2048, 4096), dtype=np.float32)
-    b = rng.standard_normal((4096, 2048), dtype=np.float32)
-    a @ b  # untimed warm-up: first call pays BLAS thread-pool spin-up
-    best = float("inf")
-    for _ in range(max(1, reps)):
+def _time_query(run_once) -> list[list[float]]:
+    """[wall seconds, host steal share] for each rep of one query: REPS
+    reps, then up to EXTRA_REPS more until one of them is clean."""
+    reps: list[list[float]] = []
+    for i in range(REPS + EXTRA_REPS):
+        if i >= REPS and any(s <= STEAL_CLEAN for _, s in reps):
+            break
+        ticks = cpu_ticks()
         t0 = time.perf_counter()
-        a @ b
-        best = min(best, time.perf_counter() - t0)
-    return best
+        run_once()
+        reps.append([time.perf_counter() - t0, steal_share(ticks, cpu_ticks())])
+    return reps
 
 
-class _QuickProbe:
-    """Per-query steal bracket: a ~25 ms 1024x4096x1024 matmul timed
-    immediately after each query (and, by chaining, immediately before
-    the next), cheap enough to run 170+ times per sweep. The r12
-    segment-probe experience showed steal windows shorter than a
-    10-query cadence (a 4.3x query between two clean probes), so the
-    bracket has to be per-query to assign blame.
-
-    The clean reference is the RUNNING MINIMUM of every reading the
-    run takes (plus the initial calibration): calibrating once up
-    front is wrong because the calibration itself can land inside a
-    steal window (observed: 0.35 s calibrated vs 0.03 s true clean,
-    which silently raised the hot threshold 10x). The minimum
-    converges to the host's true clean figure as soon as ONE quiet
-    reading occurs; on a host with NO quiet moments nothing flags,
-    which is also correct — uniform slowness is the boot's real
-    speed, not steal. Bracket classification therefore happens
-    RETROACTIVELY against the final converged reference."""
-
-    def __init__(self) -> None:
-        import numpy as np
-
-        rng = np.random.default_rng(1)
-        self._a = rng.standard_normal((1024, 4096), dtype=np.float32)
-        self._b = rng.standard_normal((4096, 1024), dtype=np.float32)
-        for _ in range(3):  # warm the BLAS pool before calibrating
-            self._a @ self._b
-        self.clean = float("inf")
-        for _ in range(5):
-            self.read()
-
-    def read(self) -> float:
-        best = float("inf")
-        for _ in range(2):  # min-of-2: halves scheduler-jitter noise
-            t0 = time.perf_counter()
-            self._a @ self._b
-            best = min(best, time.perf_counter() - t0)
-        self.clean = min(self.clean, best)
-        return best
-
-    def read_settled(self) -> float:
-        """Bracket read that separates HOST STEAL from the JVM's own
-        wind-down (r14 measurement fix, documented in
-        OPTIMIZATION_r14.md): a reading taken right after a query (even
-        after the synchronous GC) competes with residual JVM cleanup
-        threads and can read 5-20x clean on a perfectly quiet host —
-        that residual decays within ~1-2 s, while the characterized
-        steal windows (BASELINE.md Appendix A) persist for multiple
-        seconds. So when the first reading is hot, re-read a few times
-        with short sleeps and keep the MINIMUM: wind-down settles to
-        clean (bracket correctly reads quiet), genuine steal stays
-        elevated across the 2 s of re-reads (bracket correctly reads
-        hot). Steal only ever inflates, so min is conservative. The r14
-        before-sweep showed why this is needed: the coarse segment
-        probe never left its clean band (max 0.096 s vs 0.19 s
-        threshold) yet 50 queries kept 'hot' brackets purely because
-        the converged clean reference (5.6 ms on this host) put the 4x
-        threshold at 22 ms — below documented wind-down residual."""
-        best = self.read()
-        for _ in range(6):
-            if not self.hot(best):
-                break
-            time.sleep(0.3)
-            best = min(best, self.read())
-        return best
-
-    def hot(self, sec: float) -> bool:
-        return sec > _QPROBE_RATIO * max(self.clean, 1e-4)
-
-
-def _git_rev() -> str | None:
-    """Short HEAD rev, stamped into artifacts so merge mode can warn
-    when min()-merging timings measured on different code versions."""
-    import subprocess
-
-    try:
-        return (
-            subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                capture_output=True,
-                text=True,
-                timeout=10,
-            ).stdout.strip()
-            or None
-        )
-    except Exception:
-        return None
+def _classify(
+    reps: dict[str, list[list[float]]],
+) -> tuple[dict[str, float], list[str]]:
+    """(per-query time, unresolved queries). A query's time is its
+    fastest clean rep; a query with no clean rep is unresolved and keeps
+    its fastest rep, which includes host steal."""
+    timings: dict[str, float] = {}
+    unresolved: list[str] = []
+    for name, rs in reps.items():
+        clean = [sec for sec, steal in rs if steal <= STEAL_CLEAN]
+        if not clean:
+            unresolved.append(name)
+        timings[name] = round(min(clean or [sec for sec, _ in rs]), 3)
+    return timings, sorted(unresolved)
 
 
 def _refresh_baseline_row(payload: dict, headline_names: set[str]) -> None:
     """Regenerate BASELINE.md's 'query-layer headline wall' table row
     from the just-measured artifact, so the prose can never drift from
     BENCH_LOCAL.json again (it went two rounds stale when hand-edited).
-    Matched by the row's leading cell; only full sf0.1 headline runs
-    rewrite it — the coverage check lives HERE (not just at call
-    sites) because the r12 merge-repair path proved a caller can pass
-    a clean-but-partial artifact: a 4-query decade sweep merged into
-    its own subset file and clobbered the official row to '10.7 s for
-    4 queries' (commit 0f650af) while the real committed artifact held
-    218.7 s / 173."""
+    Matched by the row's leading cell; only full headline runs rewrite
+    it — the coverage check lives HERE (not just at call sites) because
+    a caller once passed a clean-but-partial artifact: a 4-query sweep
+    clobbered the official row to '10.7 s for 4 queries' (commit
+    0f650af) while the real committed artifact held 218.7 s / 173."""
     got = set(payload.get("queries", {})) | set(payload.get("errors", {}))
     if got != headline_names:
         missing = sorted(headline_names - got)[:5]
@@ -407,10 +328,10 @@ def _refresh_baseline_row(payload: dict, headline_names: set[str]) -> None:
         f"(`BENCH_LOCAL.json`), {n_err} errors, median {median:.2f} s, "
         f"slowest {t[slow_name]:.2f} s (`{slow_name}`) "
         "— AUTO-GENERATED by bench.py from the committed artifact | "
-        f"sf{payload['sf']}, local[{payload['cpus']}], best-of-3 per query, "
-        "noop sink, session recycled every "
-        f"{os.environ.get('SPARK_GRAFT_RECYCLE', '50')} queries | "
-        "`bench.py` |\n"
+        f"sf{payload['sf']}, local[{payload['cpus']}], fastest of "
+        f"{REPS}-{REPS + EXTRA_REPS} reps with <= {STEAL_CLEAN:.0%} host "
+        f"steal per query, noop sink, session recycled every {RECYCLE} "
+        "queries | `bench.py` |\n"
     )
     for i, line in enumerate(lines):
         if line.startswith("| query-layer headline wall |"):
@@ -460,6 +381,30 @@ def _guarded_out_path(
     return "BENCH_RUN.json"
 
 
+def _publish(payload: dict, headline_names: set[str], subset: bool) -> str | None:
+    """Write the artifact; returns its path, or None if it could not be
+    written. The file is SPARK_GRAFT_BENCH_OUT when set, else
+    BENCH_SUBSET.json for a subset sweep, else whatever
+    _guarded_out_path picks. BASELINE.md's row is regenerated only
+    when this run wrote the official artifact and is not poisoned, so a
+    diverted run can never rewrite it."""
+    poisoned = payload["steal_probe"]["poisoned"]
+    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or (
+        "BENCH_SUBSET.json"
+        if subset
+        else _guarded_out_path(OFFICIAL, poisoned, payload["sf"], payload["cpus"])
+    )
+    try:
+        with open(out_path, "w") as fh:
+            json.dump(payload, fh, indent=1)
+    except OSError as exc:
+        print(f"BENCH WARN could not write {out_path}: {exc}", file=sys.stderr)
+        return None
+    if os.path.basename(out_path) == OFFICIAL and not poisoned:
+        _refresh_baseline_row(payload, headline_names)
+    return out_path
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -507,64 +452,22 @@ def main() -> None:
     # ~#70) at 6.04 s vs ~3 s in a fresh session. Recycling every
     # RECYCLE queries bounds that drift; the per-segment warm-up
     # keeps the comparison apples-to-apples.
-    recycle_every = int(os.environ.get("SPARK_GRAFT_RECYCLE", "50"))
     spark = fresh_session()
 
-    # Best-of-3 back-to-back per query: run 1 pays the one-time
-    # whole-stage-codegen compile for that query's plan (several
-    # seconds for wide aggregate plans); run 2 hits the codegen cache
-    # and measures the steady-state distributed-plan cost; a third
-    # rep rides out multi-second host-noise windows (observed on this
-    # box: whole-query 2-5x swings with no local process running).
-    # Repeats
-    # must stay back-to-back: separating them by a full pass lets the
-    # (100-entry) codegen cache evict the entry, and both runs pay
-    # the compile.
-    import gc
-
-    # Steal-probe cadence: at run start, every PROBE_EVERY queries
-    # (between queries, Spark idle), and at run end. Each reading is
-    # (query_index, best_of_3_sec); any reading above
-    # ratio x characterized-clean marks the run poisoned.
-    probe_every = int(os.environ.get("SPARK_GRAFT_PROBE_EVERY", "25"))
-    probe_readings: list[list] = []
-
-    def probe(slot: int) -> None:
-        sec = round(_steal_probe(), 4)
-        probe_readings.append([slot, sec])
-        tag = "STEAL" if sec > _PROBE_POISON_RATIO * _PROBE_CLEAN_SEC else "ok"
-        print(f"BENCH PROBE at q{slot}: {sec}s [{tag}]", file=sys.stderr)
-
-    probe(0)
-    qp = _QuickProbe()
-    print(f"BENCH QPROBE calibrated clean={qp.clean:.4f}s", file=sys.stderr)
-    timings: dict[str, float] = {}
+    reps: dict[str, list[list[float]]] = {}
     errors: dict[str, str] = {}
-    query_probes: dict[str, float] = {}
-    brackets: dict[str, tuple] = {}
-    last_qp = qp.clean  # the bracket BEFORE the first query
-
-    def run_best_of_3(name: str) -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
     for qi, name in enumerate(names):
-        if qi and probe_every > 0 and qi % probe_every == 0:
-            probe(qi)
-        if qi and recycle_every > 0 and qi % recycle_every == 0:
+        if qi and qi % RECYCLE == 0:
             spark.stop()
             spark = fresh_session()
             print(f"BENCH RECYCLE session at query {qi}", file=sys.stderr)
-        ok = False
         try:
-            pre = last_qp
-            best = run_best_of_3(name)
-            ok = True
+            reps[name] = _time_query(
+                lambda: queries[name](spark, sf_dir)
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
+            )
         except Exception as exc:  # one broken query must not zero the bench
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
@@ -572,122 +475,17 @@ def main() -> None:
         # between queries: long multi-query sessions otherwise
         # accumulate JVM heap pressure that inflates later timings
         # 2-3x (GC pauses mid-query), which would misread as
-        # operator cost. The post-probe reads AFTER this synchronous
-        # GC — probing straight off the query's tail measures the
-        # JVM's own wind-down (2-3x on a quiet host), not the host.
-        df = None
+        # operator cost.
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        # Refresh the chained bracket even when the query ERRORED:
-        # otherwise the next query's pre-bracket is a stale reading
-        # taken before the failure, and a steal window starting during
-        # the failed query can hide behind a clean-looking bracket.
-        post = qp.read_settled()
-        last_qp = post
-        if ok:
-            query_probes[name] = round(post, 4)
-            brackets[name] = (pre, post)
-            timings[name] = round(best, 3)
-            tag = " [hot bracket]" if qp.hot(pre) or qp.hot(post) else ""
-            print(f"BENCH OK {name}: {timings[name]}s{tag}", file=sys.stderr)
+        if name in reps:
+            t, hot = _classify({name: reps[name]})
+            steal = "/".join(f"{s:.3f}" for _, s in reps[name])
+            tag = " [no clean rep]" if hot else ""
+            print(f"BENCH OK {name}: {t[name]}s (steal {steal}){tag}", file=sys.stderr)
 
-    # Retroactive bracket classification with the CONVERGED clean
-    # reference (see _QuickProbe: inline classification would trust a
-    # possibly-steal-inflated calibration).
-    suspects = [
-        n
-        for n, (pre, post) in brackets.items()
-        if n in timings and (qp.hot(pre) or qp.hot(post))
-    ]
-    if suspects:
-        print(
-            f"BENCH {len(suspects)} suspect(s) vs converged clean "
-            f"{qp.clean:.4f}s: {', '.join(suspects)}",
-            file=sys.stderr,
-        )
-
-    # Retry-on-steal: steal only ever INFLATES a wall reading, so a
-    # suspect re-measured under a clean bracket takes min(old, new).
-    # Two rounds, each waiting up to 60 s for the host to go quiet —
-    # per-query retries converge where whole-sweep retries can't (a
-    # clean 25-minute window may never occur on a stealing host; a
-    # clean 5-second window almost always does). A global budget caps
-    # the pass: a steal STORM marking dozens of suspects must not turn
-    # an automated sweep into hours of quiet-waiting — whatever is
-    # still hot when the budget runs out ships as unresolved, which is
-    # the honest answer anyway.
-    retry_budget = float(os.environ.get("SPARK_GRAFT_RETRY_BUDGET_SEC", "600"))
-    retry_t0 = time.perf_counter()
-    retried: list[str] = []
-    retry_errors: dict[str, str] = {}
-    for _round in range(2):
-        if not suspects:
-            break
-        # Triage DESCENDING by recorded time: when the budget runs out
-        # mid-pass (r12 driver sweep: 34 unresolved at 600 s), the
-        # multi-second steal-inflated readings distort the total most,
-        # so they must be re-measured first — not whatever sub-second
-        # query happened to come earlier in registry order.
-        suspects = sorted(suspects, key=lambda n: -timings.get(n, 0.0))
-        still: list[str] = []
-        for name in suspects:
-            if time.perf_counter() - retry_t0 > retry_budget:
-                print(
-                    f"BENCH RETRY-BUDGET exhausted ({retry_budget}s) — "
-                    f"{name} and later suspects stay unresolved",
-                    file=sys.stderr,
-                )
-                still.append(name)
-                continue
-            pre = qp.read()
-            for _ in range(30):
-                if not qp.hot(pre):
-                    break
-                time.sleep(2)
-                pre = qp.read()
-            try:
-                best = run_best_of_3(name)
-            except Exception as exc:
-                # NOT the shared errors dict: the query already has a
-                # valid (if steal-inflated) timing from the main pass;
-                # reporting it as both timed and errored would make the
-                # artifact self-contradictory.
-                retry_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                print(
-                    f"BENCH RETRY-ERROR {name}: {retry_errors[name]}",
-                    file=sys.stderr,
-                )
-                still.append(name)
-                continue
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            post = qp.read_settled()
-            new = round(min(timings[name], best), 3)
-            improved = new < timings[name]
-            timings[name] = new
-            retried.append(name)
-            if qp.hot(pre) or qp.hot(post):
-                still.append(name)
-                print(
-                    f"BENCH RETRY-HOT {name}: {new}s "
-                    f"(bracket {pre:.3f}/{post:.3f}s)",
-                    file=sys.stderr,
-                )
-            else:
-                print(
-                    f"BENCH RETRY-CLEAN {name}: {new}s"
-                    f"{' (improved)' if improved else ''}",
-                    file=sys.stderr,
-                )
-        suspects = still
-
-    probe(len(names))
-    worst_probe = max(s for _, s in probe_readings)
-    # poisoned = some query NEVER got a clean-bracketed reading; the
-    # coarse segment probes are kept as the run's noise ledger but no
-    # longer decide the flag (a steal window between queries does not
-    # contaminate any query's accepted timing).
-    poisoned = bool(suspects)
+    timings, unresolved = _classify(reps)
+    poisoned = bool(unresolved)
     total = round(sum(timings.values()), 3)
     payload = {
         "metric": "headline_queries_total_wall",
@@ -696,144 +494,29 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "cpus": cpus,
-        "git_rev": _git_rev(),
         "steal_probe": {
-            "matmul": "2048x4096x2048 float32, best-of-3 per reading",
-            "clean_ref_sec": _PROBE_CLEAN_SEC,
-            "poison_ratio": _PROBE_POISON_RATIO,
-            "readings": probe_readings,
-            "max_sec": round(worst_probe, 4),
-            "quick_clean_sec": round(qp.clean, 4),
-            "query_post_probes": query_probes,
-            "retried": sorted(set(retried)),
-            "unresolved": sorted(suspects),
+            "source": "host steal share per rep from /proc/stat",
+            "clean_bound": STEAL_CLEAN,
+            "rep_steal": {
+                n: [round(s, 4) for _, s in rs] for n, rs in reps.items()
+            },
+            "unresolved": unresolved,
             "poisoned": poisoned,
         },
     }
-    if retry_errors:
-        payload["steal_probe"]["retry_errors"] = retry_errors
     if poisoned:
         print(
-            f"BENCH POISONED: {len(suspects)} quer"
-            f"{'y' if len(suspects) == 1 else 'ies'} never got a "
-            f"clean-bracketed reading ({', '.join(sorted(suspects))}) — "
-            "those timings include host CPU steal; do not treat their "
-            "drift as regression (BASELINE.md Appendix A)",
+            f"BENCH POISONED: {len(unresolved)} quer"
+            f"{'y' if len(unresolved) == 1 else 'ies'} never got a rep "
+            f"with <= {STEAL_CLEAN:.0%} host steal "
+            f"({', '.join(unresolved)}) — those timings include host "
+            "CPU steal; do not treat their drift as regression",
             file=sys.stderr,
         )
     if errors:
         payload["errors"] = errors
     print(json.dumps(payload))
-    # Repair mode (SPARK_GRAFT_BENCH_MERGE=<artifact>): a subset run
-    # re-measures its queries INTO an existing full artifact instead
-    # of writing a separate file — the surgical fix for a sweep whose
-    # retry pass left 1-2 unresolved steal suspects (observed r12: a
-    # 173-query sweep fully clean except ONE 0.23 s query whose
-    # brackets kept landing in steal windows; re-running 25 minutes of
-    # clean measurements to repair 0.23 s is the wrong trade). Rules:
-    # merged timings take min(old, new) — steal only inflates — a
-    # merged query only LEAVES the unresolved list if this run's
-    # brackets were clean, and the baseline row refreshes only once
-    # the merged artifact has no unresolved queries left.
-    merge_path = os.environ.get("SPARK_GRAFT_BENCH_MERGE")
-    if only and merge_path and os.path.exists(merge_path):
-        with open(merge_path) as fh:
-            full = json.load(fh)
-        # min() across runs is only valid when both runs measured the
-        # SAME thing: refuse cross-SF merges outright (an sf0.1 repair
-        # min()-merged into an sf1 artifact keeps nonsense "faster"
-        # numbers), and warn on code-version mismatch (post-change
-        # timings merged into a pre-change artifact keep stale minima).
-        if full.get("sf") is not None and full["sf"] != sf:
-            print(
-                f"BENCH MERGE REFUSED: artifact sf={full['sf']} != run "
-                f"sf={sf} — min()-merging across scale factors corrupts "
-                "the artifact",
-                file=sys.stderr,
-            )
-            spark.stop()
-            return
-        rev = _git_rev()
-        if full.get("git_rev") and rev and full["git_rev"] != rev:
-            print(
-                f"BENCH MERGE WARNING: artifact measured at rev "
-                f"{full['git_rev']}, this run is {rev} — min() keeps the "
-                "stale faster reading if the code changed; re-run the "
-                "full sweep if these queries' code differs between revs",
-                file=sys.stderr,
-            )
-        sp = full.setdefault("steal_probe", {})
-        unresolved = set(sp.get("unresolved", []))
-        for name, sec in timings.items():
-            if name not in full.get("queries", {}):
-                # A birth can grow HEADLINE after the full artifact was
-                # recorded; append its timing rather than forcing a full
-                # re-sweep — but only a clean-bracketed reading, and only
-                # for a query the current HEADLINE set actually contains
-                # (anything else merged here would silently widen the
-                # artifact past the official set).
-                if name in headline_names and name not in suspects:
-                    full["queries"][name] = sec
-                    print(
-                        f"BENCH MERGE {name}: appended {sec}s "
-                        "(new headline query, clean bracket)",
-                        file=sys.stderr,
-                    )
-                elif name in headline_names:
-                    unresolved.add(name)
-                    full["queries"][name] = sec
-                    print(
-                        f"BENCH MERGE {name}: appended {sec}s but "
-                        "bracket was NOT clean — marked unresolved",
-                        file=sys.stderr,
-                    )
-                continue
-            old_sec = full["queries"][name]
-            full["queries"][name] = min(old_sec, sec)
-            if name not in suspects:  # this run's brackets were clean
-                unresolved.discard(name)
-                print(
-                    f"BENCH MERGE {name}: {old_sec} -> "
-                    f"{full['queries'][name]}s (clean bracket)",
-                    file=sys.stderr,
-                )
-        full["value"] = round(sum(full["queries"].values()), 3)
-        sp["unresolved"] = sorted(unresolved)
-        sp["poisoned"] = bool(unresolved)
-        sp.setdefault("merged_repairs", []).extend(sorted(timings))
-        with open(merge_path, "w") as fh:
-            json.dump(full, fh, indent=1)
-        print(
-            f"BENCH MERGED into {merge_path}: total {full['value']}s, "
-            f"unresolved={sp['unresolved']}",
-            file=sys.stderr,
-        )
-        if abs(sf - 0.1) < 1e-9 and not sp["poisoned"]:
-            _refresh_baseline_row(full, headline_names)
-        print(json.dumps(payload))
-        spark.stop()
-        return
-
-    # Self-recorded artifact: the driver's capture truncates long JSON
-    # tails (BENCH_r04 lost 14 of 80 per-query timings), so persist
-    # the complete payload next to the repo-root BENCH_r*.json files.
-    # Subset sweeps (SPARK_GRAFT_BENCH_QUERIES) default to a separate
-    # file so a targeted run never clobbers the full headline artifact.
-    default_out = "BENCH_SUBSET.json" if only else "BENCH_LOCAL.json"
-    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
-    if out_path == default_out and not only and not os.environ.get("SPARK_GRAFT_BENCH_OUT"):
-        out_path = _guarded_out_path(out_path, poisoned, sf, cpus)
-    try:
-        with open(out_path, "w") as fh:
-            json.dump(payload, fh, indent=1)
-    except OSError as exc:
-        print(f"BENCH WARN could not write {out_path}: {exc}", file=sys.stderr)
-        out_path = None
-    # Only a clean-probed full headline run may rewrite the official
-    # baseline row — a poisoned sweep embedding 11-17x steal into
-    # BASELINE.md is exactly the r11 failure this probe exists to stop.
-    if not only and abs(sf - 0.1) < 1e-9 and not poisoned:
-        _refresh_baseline_row(payload, headline_names)
+    out_path = _publish(payload, headline_names, bool(only))
     # LAST stdout line: a compact self-describing summary that survives
     # the driver's 2,000-char tail capture (the full line above is
     # ~4 KB and was truncated to parsed:null in BENCH_r04/r05). Anyone
@@ -847,7 +530,7 @@ def main() -> None:
         "cpus": cpus,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "steal_probe_max_sec": round(worst_probe, 4),
+        "n_unresolved": len(unresolved),
         "steal_poisoned": poisoned,
         "queries_file": out_path and os.path.abspath(out_path),
     }

@@ -13,9 +13,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Default driver heap: this share of physical memory, capped (in MiB).
+HEAP_SHARE = 0.45
+HEAP_CAP_MB = 16 * 1024
+
+
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """HEAP_SHARE of MemTotal, capped at HEAP_CAP_MB; the cap when
+    physical memory cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{HEAP_CAP_MB}m"
+    return f"{min(HEAP_CAP_MB, int(kb / 1024 * HEAP_SHARE))}m"
+
+
 def _driver_mem() -> str:
     """Driver heap size; one env knob drives both -Xmx and the -Xms pin."""
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 
 def get_spark(app_name: str = "protarrow-spark", cpus: int | None = None) -> SparkSession:
@@ -40,7 +56,9 @@ def get_spark(app_name: str = "protarrow-spark", cpus: int | None = None) -> Spa
         # local[N] runs everything in the driver JVM: N executor threads
         # x Arrow batch buffers + broadcast + cache all share this heap.
         # 8g showed GC-pressure variance (2-3x query-time swings late in
-        # multi-query sessions); 16g of the box's 128 GiB removes it.
+        # multi-query sessions); 16g removes it where the host has the
+        # memory, and a smaller host gets HEAP_SHARE of its memory so
+        # the JVM can reserve the heap at all.
         # -Xms pins the heap at the same size as -Xmx: G1 otherwise
         # uncommits after full GCs and every heavy query re-pays
         # multi-second heap re-expansion. Deriving Xms from the same env

@@ -136,3 +136,89 @@ def test_refresh_guard_refuses_partial_payload(tmp_path, monkeypatch):
     }
     bench._refresh_baseline_row(full, full_names)
     assert "5.0 s total for 10 queries" in scratch.read_text()
+
+
+def _scratch_row(tmp_path, monkeypatch):
+    """Scratch BASELINE.md (as in the partial-payload test) and cwd, so
+    the published artifact and the row both live under tmp_path."""
+    import bench
+
+    scratch = tmp_path / "BASELINE.md"
+    marker = "| query-layer headline wall | SENTINEL |\n"
+    scratch.write_text(marker)
+    monkeypatch.setattr(
+        bench.os.path, "dirname", lambda _p, _d=str(tmp_path): _d
+    )
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_OUT", raising=False)
+    return scratch, marker
+
+
+def _payload(names, cpus, unresolved=()):
+    return {
+        "value": 5.0,
+        "sf": 0.1,
+        "cpus": cpus,
+        "queries": {n: 0.5 for n in names},
+        "steal_probe": {
+            "unresolved": sorted(unresolved),
+            "poisoned": bool(unresolved),
+        },
+    }
+
+
+def test_diverted_run_leaves_row_untouched(tmp_path, monkeypatch):
+    """The r14 hole: a run diverted away from BENCH_LOCAL.json must not
+    regenerate the row, whether it was diverted for its core count or
+    for being steal-poisoned."""
+    import bench
+
+    scratch, marker = _scratch_row(tmp_path, monkeypatch)
+    names = {f"q{i}" for i in range(10)}
+    official = tmp_path / "BENCH_LOCAL.json"
+    official.write_text(json.dumps({"value": 201.0, "cpus": 32}))
+
+    # clean, full coverage, but measured at a different core count
+    assert bench._publish(_payload(names, 4), names, False) == "BENCH_RUN.json"
+    assert scratch.read_text() == marker, "cpus-diverted run rewrote the row"
+    assert json.loads(official.read_text())["cpus"] == 32
+
+    # full coverage at the committed core count, but poisoned
+    poisoned = _payload(names, 32, unresolved=["q3"])
+    assert bench._publish(poisoned, names, False) == "BENCH_RUN.json"
+    assert scratch.read_text() == marker, "poisoned run rewrote the row"
+
+    # control: the comparable clean run takes the official path and does
+    # rewrite the row, so the two checks above are not vacuous
+    assert bench._publish(_payload(names, 32), names, False) == "BENCH_LOCAL.json"
+    assert "5.0 s total for 10 queries" in scratch.read_text()
+
+
+def test_query_without_clean_rep_is_unresolved():
+    import bench
+
+    hot = bench.STEAL_CLEAN * 2
+    reps = {
+        # fastest rep is stolen: the time is the fastest CLEAN rep
+        "mixed": [[1.0, 0.0], [0.4, hot], [0.8, bench.STEAL_CLEAN]],
+        # every rep over the bound, extra reps included
+        "stolen": [[2.0, hot]] * (bench.REPS + bench.EXTRA_REPS),
+    }
+    timings, unresolved = bench._classify(reps)
+    assert timings == {"mixed": 0.8, "stolen": 2.0}
+    assert unresolved == ["stolen"]
+    assert bool(unresolved)  # poisoned = bool(unresolved)
+    assert bench._classify({"mixed": reps["mixed"]})[1] == []
+
+
+def test_extra_reps_only_until_one_is_clean(monkeypatch):
+    import bench
+
+    steal = iter([0.5, 0.5, 0.5, 0.5, 0.0, 0.5])
+    monkeypatch.setattr(bench, "steal_share", lambda _a, _b: next(steal))
+    reps = bench._time_query(lambda: None)
+    # three stolen reps, then extra reps stop at the first clean one
+    assert [s for _, s in reps] == [0.5, 0.5, 0.5, 0.5, 0.0]
+
+    monkeypatch.setattr(bench, "steal_share", lambda _a, _b: 0.0)
+    assert len(bench._time_query(lambda: None)) == bench.REPS

@@ -89,18 +89,3 @@ def test_knn_label_audit_excludes_null_and_zero_norm(spark):
 # was replaced in r13 by the block-pair split; the equivalence tests
 # live in tests/test_r13_ops.py.
 
-
-def test_quickprobe_running_min_and_hot():
-    """The steal bracket's clean reference must converge downward (a
-    calibration taken inside a steal window must not stick) and the
-    hot() threshold must follow the converged minimum."""
-    import bench
-
-    qp = bench._QuickProbe()
-    first_clean = qp.clean
-    assert first_clean > 0
-    for _ in range(3):
-        qp.read()
-    assert qp.clean <= first_clean  # running min never rises
-    assert not qp.hot(qp.clean)
-    assert qp.hot(qp.clean * bench._QPROBE_RATIO * 1.01)
