@@ -7,13 +7,18 @@ in the reference) decodes into typed columns on executors, and typed
 columns serialize back to proto bytes for a Kafka/file sink.
 
 Implementation: ``mapInPandas`` (Arrow-batched, one Python worker per
-partition) + the pure-Python wire codec (``proto/message.py``) + the
-compiled row/message converters (``conversion/encode.py`` /
-``conversion/decode.py``). Spark's built-in ``from_protobuf`` /
-``to_protobuf`` would be the zero-Python alternative but requires the
-external spark-protobuf jar and compiled descriptor sets; this path
-has no such dependency and supports the engine's config policies
-(uint64/timestamp/enum rendering) during decode itself.
+partition), one per-batch loop per direction (:func:`_decode_cells` /
+:func:`_encode_cells`). Each batch runs the numpy batch kernel
+(``conversion/vectorized.py`` / ``vectorized_decode.py``); the row
+kernels (:func:`compile_row_to_wire`, and the Message path
+:func:`compile_wire_to_row`) are the semantics oracle and take a batch
+the batch kernel cannot (compiler returned None, or ``Unvectorizable``).
+
+Spark's built-in ``from_protobuf`` / ``to_protobuf`` would be the
+zero-Python alternative but requires the external spark-protobuf jar
+and compiled descriptor sets; this path has no such dependency and
+supports the engine's config policies (uint64/timestamp/enum
+rendering) during decode itself.
 
 Scale notes:
 
@@ -27,7 +32,7 @@ Scale notes:
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterable, Iterator
+from typing import Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -35,13 +40,74 @@ from pyspark.sql import types as T
 
 from protarrow_spark.config import ProtarrowSparkConfig
 from protarrow_spark.conversion.encode import row_builder
-from protarrow_spark.proto.message import Message, parse
+from protarrow_spark.conversion.vectorized import (
+    Unvectorizable,
+    compile_batch_to_wire,
+)
+from protarrow_spark.conversion.vectorized_decode import compile_wire_to_batch
+from protarrow_spark.proto.message import parse
 from protarrow_spark.proto.model import MessageType
 from protarrow_spark.schema import message_type_to_schema
 
-#: Consecutive Unvectorizable batches before the encoder stops
-#: retrying the vectorized path for the rest of the partition.
-_VEC_MAX_STRIKES = 3
+#: A malformed record raises one of these from the row decoder; in
+#: permissive mode the row decodes to all nulls.
+_DECODE_ERRORS = (ValueError, TypeError, IndexError, struct.error)
+
+#: A contract-violating row raises one of these from the row encoder;
+#: in permissive mode its cell is null. Deliberately NOT
+#: AttributeError: a contract violation is a bad VALUE
+#: (range/type/overflow); an AttributeError is an encoder bug and must
+#: fail the task, not hide as a dead letter.
+_ENCODE_ERRORS = (ValueError, TypeError, OverflowError, struct.error)
+
+
+def _decode_cells(decode_batch, decode_row, wires, n_fields, permissive):
+    """One batch of wire cells -> ``n_fields`` decoded columns.
+
+    The batch kernel runs unless it did not compile (None) or raises
+    ``Unvectorizable`` on this batch; then the row kernel decodes it.
+    In permissive mode a None or malformed cell decodes to an all-null
+    row (the batch kernel nulls the same rows itself)."""
+    if decode_batch is not None:
+        try:
+            return decode_batch(wires)[0]
+        except Unvectorizable:
+            pass
+    rows = []
+    for w in wires:
+        try:
+            rows.append(decode_row(bytes(w)))  # bytes(None): TypeError
+        except _DECODE_ERRORS:
+            if not permissive:
+                raise
+            rows.append((None,) * n_fields)
+    return [list(c) for c in zip(*rows)] if rows else [[]] * n_fields
+
+
+def _encode_cells(encode_batch, encode_row, cols, permissive):
+    """One batch of field columns -> its wire cells.
+
+    The batch kernel runs unless it did not compile (None), raises
+    ``Unvectorizable`` on this batch, or (permissive only) raises on a
+    contract-violating value; then the row kernel encodes it, nulling
+    each violating row in permissive mode."""
+    if encode_batch is not None:
+        try:
+            return encode_batch(cols)
+        except Unvectorizable:
+            pass
+        except _ENCODE_ERRORS:
+            if not permissive:
+                raise
+    cells = []
+    for rec in zip(*cols):
+        try:
+            cells.append(encode_row(rec))
+        except _ENCODE_ERRORS:
+            if not permissive:
+                raise
+            cells.append(None)
+    return cells
 
 
 def decode_proto_bytes(
@@ -84,61 +150,22 @@ def decode_proto_bytes(
     out_schema = T.StructType(passthrough + decoded_fields)
     out_names = [f.name for f in out_schema.fields]
     src = df.select(*keep, bytes_col)
-    null_row = (None,) * len(schema.fields)
-
     decoded_names = [f.name for f in schema.fields]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from protarrow_spark.conversion.vectorized import Unvectorizable
-        from protarrow_spark.conversion.vectorized_decode import (
-            compile_wire_to_batch,
-        )
-
-        # Vectorized columnar fast path for flat messages
-        # (conversion/vectorized_decode.py: the transposed numpy wire
-        # parser, value-identical by differential + corrupt-bytes fuzz
-        # test). The compiled row path stays the semantics oracle and
-        # the fallback for unsupported shapes and runtime surprises.
         decode_batch = compile_wire_to_batch(mtype, config, permissive=permissive)
-        decode_wire = compile_wire_to_row(mtype, config)
-
-        def decode_rowwise(batch):
-            rows = []
-            raw = batch[bytes_col]
-            kept = [batch[c] for c in keep]
-            for i in range(len(batch)):
-                kept_vals = tuple(k.iloc[i] for k in kept)
-                cell = raw.iloc[i]
-                if permissive:
-                    try:
-                        decoded = decode_wire(bytes(cell) if cell is not None else b"")
-                    except (ValueError, TypeError, IndexError, struct.error):
-                        decoded = null_row
-                    if cell is None:
-                        decoded = null_row
-                else:
-                    decoded = decode_wire(bytes(cell))
-                rows.append(kept_vals + decoded)
-            return pd.DataFrame.from_records(rows, columns=out_names)
-
-        strikes = 0
+        decode_row = compile_wire_to_row(mtype, config)
         for batch in batches:
-            if decode_batch is not None:
-                try:
-                    cols, _bad = decode_batch(list(batch[bytes_col]))
-                except Unvectorizable:
-                    strikes += 1
-                    if strikes >= _VEC_MAX_STRIKES:
-                        decode_batch = None
-                    yield decode_rowwise(batch)
-                    continue
-                strikes = 0
-                out = {c: batch[c].reset_index(drop=True) for c in keep}
-                for name, col in zip(decoded_names, cols):
-                    out[name] = col
-                yield pd.DataFrame(out, columns=out_names)
-                continue
-            yield decode_rowwise(batch)
+            cols = _decode_cells(
+                decode_batch,
+                decode_row,
+                list(batch[bytes_col]),
+                len(decoded_names),
+                permissive,
+            )
+            out = {c: batch[c].reset_index(drop=True) for c in keep}
+            out.update(zip(decoded_names, cols))
+            yield pd.DataFrame(out, columns=out_names)
 
     return src.mapInPandas(decode, out_schema)
 
@@ -181,114 +208,22 @@ def encode_proto_bytes(
     src = df.select(*keep, *field_names)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from protarrow_spark.conversion.vectorized import (
-            Unvectorizable,
-            compile_batch_to_wire,
-        )
-
-        # Vectorized columnar fast path for flat messages (~10-20x the
-        # row path: numpy varints, masks, and Timestamp bodies —
-        # conversion/vectorized.py, byte-identical by differential
-        # test); the compiled row path stays the semantics oracle and
-        # the fallback for unsupported shapes, unexpected dtypes, and
-        # PERMISSIVE batches containing a contract-violating row
-        # (permissive batches compile with permissive=True: range
-        # violations null exactly the violating rows vectorized — no
-        # row-wise re-encode of the whole batch).
-        encode_batch = compile_batch_to_wire(
-            mtype, config, permissive=permissive
-        )
+        # permissive batches compile with permissive=True: range
+        # violations null exactly the violating rows in the batch
+        # kernel, with no row-wise re-encode of the whole batch
+        encode_batch = compile_batch_to_wire(mtype, config, permissive=permissive)
         encode_row = compile_row_to_wire(mtype, config)
-
-        def encode_rowwise(batch, kept):
-            records = zip(*(batch[c] for c in field_names))
-            rows = []
-            if permissive:
-                for i, rec in enumerate(records):
-                    try:
-                        cell = encode_row(rec)
-                    except (
-                        ValueError,
-                        TypeError,
-                        OverflowError,
-                        struct.error,
-                    ):
-                        # deliberately NOT AttributeError: a contract
-                        # violation is a bad VALUE (range/type/overflow);
-                        # an AttributeError is an encoder bug and must
-                        # fail the task, not hide as a dead letter
-                        cell = None
-                    rows.append(tuple(k.iloc[i] for k in kept) + (cell,))
-            else:
-                for i, rec in enumerate(records):
-                    rows.append(
-                        tuple(k.iloc[i] for k in kept) + (encode_row(rec),)
-                    )
-            return pd.DataFrame.from_records(rows, columns=out_names)
-
-        yield from _encode_stream(
-            batches,
-            encode_batch,
-            encode_rowwise,
-            field_names=field_names,
-            keep=keep,
-            out_names=out_names,
-            output_col=output_col,
-            permissive=permissive,
-        )
+        for batch in batches:
+            out = {c: batch[c].reset_index(drop=True) for c in keep}
+            out[output_col] = _encode_cells(
+                encode_batch,
+                encode_row,
+                [batch[c] for c in field_names],
+                permissive,
+            )
+            yield pd.DataFrame(out, columns=out_names)
 
     return src.mapInPandas(encode, out_schema)
-
-
-def _encode_stream(
-    batches,
-    encode_batch,
-    encode_rowwise,
-    *,
-    field_names,
-    keep,
-    out_names,
-    output_col,
-    permissive,
-):
-    """Per-partition encode loop: vectorized fast path with row-path
-    fallback.
-
-    Unvectorizable usually means a partition-wide dtype shape (Arrow
-    hands every batch of a partition the same schema), but object-dtype
-    columns can confine the offending VALUE to one batch — so retry the
-    vectorized path on subsequent batches and only disable it for the
-    rest of the partition after :data:`_VEC_MAX_STRIKES` consecutive
-    failures (bounding the wasted precompute at a constant, not
-    per-batch forever)."""
-    import pandas as pd
-
-    from protarrow_spark.conversion.vectorized import Unvectorizable
-
-    strikes = 0
-    for batch in batches:
-        kept = [batch[c] for c in keep]
-        if encode_batch is not None:
-            try:
-                cells = encode_batch([batch[c] for c in field_names])
-            except Unvectorizable:
-                strikes += 1
-                if strikes >= _VEC_MAX_STRIKES:
-                    encode_batch = None
-                yield encode_rowwise(batch, kept)
-                continue
-            except (ValueError, TypeError, OverflowError, struct.error):
-                if not permissive:
-                    raise
-                yield encode_rowwise(batch, kept)
-                continue
-            else:
-                strikes = 0
-                out = {c: batch[c].reset_index(drop=True) for c in keep}
-                out[output_col] = cells
-                yield pd.DataFrame(out, columns=out_names)
-                continue
-        yield encode_rowwise(batch, kept)
 
 
 def proto_roundtrip(
@@ -303,11 +238,10 @@ def proto_roundtrip(
     Fused into ONE ``mapInPandas`` hop: chaining the public
     ``encode_proto_bytes`` -> ``decode_proto_bytes`` plans two Python
     runners per task (double the Arrow JVM<->Python transfer and
-    double the worker pool); the fused map exercises the identical
-    codec path (message build -> serialize -> parse -> row build) with
-    a single hop. In production the two directions are separate jobs
-    (produce vs consume), so the fused form is also the honest cost
-    model for each side."""
+    double the worker pool); the fused map runs the same two per-batch
+    loops with a single hop. In production the two directions are
+    separate jobs (produce vs consume), so the fused form is also the
+    honest cost model for each side."""
     import pandas as pd
 
     schema = message_type_to_schema(mtype, config)
@@ -315,48 +249,18 @@ def proto_roundtrip(
     src = df.select(*out_names)
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # both halves compiled AND vectorized when the message shape
-        # supports it: columns -> wire bytes (conversion/vectorized.py,
-        # byte-identical by differential test) -> columns
-        # (conversion/vectorized_decode.py, value-identical by
-        # differential + corrupt-fuzz test). Row paths remain the
-        # semantics oracle and the fallback on either half.
-        from protarrow_spark.conversion.vectorized import (
-            Unvectorizable,
-            compile_batch_to_wire,
-        )
-        from protarrow_spark.conversion.vectorized_decode import (
-            compile_wire_to_batch,
-        )
-
         encode_batch = compile_batch_to_wire(mtype, config)
         encode_row = compile_row_to_wire(mtype, config)
         decode_batch = compile_wire_to_batch(mtype, config)
-        decode_wire = compile_wire_to_row(mtype, config)
+        decode_row = compile_wire_to_row(mtype, config)
         for batch in batches:
-            wires = None
-            if encode_batch is not None:
-                try:
-                    wires = encode_batch([batch[c] for c in out_names])
-                except Unvectorizable:
-                    encode_batch = None
-            if wires is None:
-                wires = [
-                    encode_row(rec)
-                    for rec in zip(*(batch[c] for c in out_names))
-                ]
-            if decode_batch is not None:
-                try:
-                    cols, _bad = decode_batch(wires)
-                except Unvectorizable:
-                    decode_batch = None
-                else:
-                    yield pd.DataFrame(
-                        dict(zip(out_names, cols)), columns=out_names
-                    )
-                    continue
-            rows = [decode_wire(w) for w in wires]
-            yield pd.DataFrame.from_records(rows, columns=out_names)
+            wires = _encode_cells(
+                encode_batch, encode_row, [batch[c] for c in out_names], False
+            )
+            cols = _decode_cells(
+                decode_batch, decode_row, wires, len(out_names), False
+            )
+            yield pd.DataFrame(dict(zip(out_names, cols)), columns=out_names)
 
     return src.mapInPandas(roundtrip, schema)
 
@@ -520,344 +424,17 @@ def compile_row_to_wire(
     return encode_row
 
 
-def _make_scalar_reader(kind):
-    """Pre-bound ``(data, pos) -> (value, pos)`` for one scalar kind —
-    the per-kind dispatch chain of ``_read_scalar`` resolved at compile
-    time (it costs an enum hash + ladder walk PER SCALAR at decode
-    time). Semantics identical to ``_read_scalar`` by construction;
-    differential-pinned by the compiled-decoder test matrix."""
-    import struct as _struct
-
-    from protarrow_spark.proto.message import (
-        _check_bounds,
-        _read_scalar,
-        _read_varint,
-    )
-    from protarrow_spark.proto.model import Kind
-
-    U64, S64 = 1 << 64, 1 << 63
-
-    if kind in (Kind.INT64, Kind.ENUM):
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return (raw - U64 if raw >= S64 else raw), pos
-
-    elif kind is Kind.INT32:
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            low = raw & 0xFFFFFFFF
-            return (low - (1 << 32) if low >= (1 << 31) else low), pos
-
-    elif kind in (Kind.UINT32, Kind.UINT64):
-        r = _read_varint
-    elif kind in (Kind.SINT32, Kind.SINT64):
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return (raw >> 1) ^ -(raw & 1), pos
-
-    elif kind is Kind.BOOL:
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return raw != 0, pos
-
-    elif kind is Kind.DOUBLE:
-
-        def r(data, pos):
-            return _struct.unpack_from("<d", data, pos)[0], pos + 8
-
-    elif kind is Kind.STRING:
-
-        def r(data, pos):
-            n, pos = _read_varint(data, pos)
-            _check_bounds(data, pos, n)
-            return data[pos : pos + n].decode("utf-8"), pos + n
-
-    elif kind is Kind.BYTES:
-
-        def r(data, pos):
-            n, pos = _read_varint(data, pos)
-            _check_bounds(data, pos, n)
-            return bytes(data[pos : pos + n]), pos + n
-
-    else:  # float / fixed kinds: rare — keep the generic reader
-
-        def r(data, pos, *, kind=kind):
-            return _read_scalar(data, pos, kind)
-
-    return r
 
 
 def compile_wire_to_row(
     mtype: MessageType,
     config: ProtarrowSparkConfig = ProtarrowSparkConfig(),
 ):
-    """Compile ``serialized bytes -> row tuple (schema field order)``
-    without building a top-level Message.
+    """Compile ``serialized bytes -> row tuple (schema field order)``.
 
-    The inverse fast path of :func:`compile_row_to_wire`: one pass
-    over the wire stream dispatches on field number into per-field
-    handlers that write row cells directly. All conversion policy is
-    the SAME compiled converters the Message path uses
-    (``encode._scalar_converter`` / ``encode._value_converter``), and
-    the public merge semantics are preserved exactly: scalars last-
-    wins, single message fields MERGE across occurrences (accumulated
-    in a sub-Message, converted once at the end), repeated/map append/
-    overwrite, unknown fields skip, oneof later-member-wins clears its
-    siblings, packed and expanded repeated encodings both accepted.
-    Nested message VALUES still parse into Messages (their converters
-    need message trees); only the top level is direct — which is where
-    the per-row allocation + attribute-protocol cost lives.
-
-    Differential-tested bit-for-bit against ``row_builder(parse(...))``
-    over the golden corpora and the random full matrix.
-    """
-    from protarrow_spark.conversion.encode import (
-        _identity as _conv_identity,
-        _scalar_converter,
-        _value_converter,
-    )
-    from protarrow_spark.proto.message import (
-        _check_bounds,
-        _read_varint,
-        _skip,
-        parse_into,
-    )
-    from protarrow_spark.proto.model import TIMESTAMP, Kind
-
-    trace = (mtype.full_name,)
-    n_fields = len(mtype.fields)
-    index_of = {f.name: i for i, f in enumerate(mtype.fields)}
-
-    init_cells: list = [None] * n_fields
-    finalizers: list = []  # (idx, fn) applied in field order
-    handlers: dict[int, object] = {}
-
-    for field in mtype.fields:
-        idx = index_of[field.name]
-        sibs = (
-            tuple(
-                index_of[s.name]
-                for s in mtype.fields
-                if s.oneof == field.oneof and s.name != field.name
-            )
-            if field.oneof is not None
-            else ()
-        )
-        if field.is_map:
-            entry_mt = field.message
-            key_conv = _scalar_converter(entry_mt.fields_by_number[1], config)
-            val_conv = _value_converter(
-                entry_mt.fields_by_number[2], config, trace
-            )
-            as_list = config.map_as_list
-
-            def h_map(data, pos, wt, slots, *, idx=idx, entry_mt=entry_mt):
-                ln, pos = _read_varint(data, pos)
-                _check_bounds(data, pos, ln)
-                entry = Message(entry_mt)
-                parse_into(entry, data[pos : pos + ln])
-                d = slots[idx]
-                if d is None:
-                    d = {}
-                    slots[idx] = d
-                d[entry.key] = entry.value
-                return pos + ln
-
-            def f_map(raw, *, key_conv=key_conv, val_conv=val_conv, as_list=as_list):
-                items = raw.items() if raw else ()
-                if as_list:
-                    return [(key_conv(k), val_conv(v)) for k, v in items]
-                return {key_conv(k): val_conv(v) for k, v in items}
-
-            handlers[field.number] = h_map
-            finalizers.append((idx, f_map))
-        elif field.kind is Kind.MESSAGE:
-            sub_mt = field.message
-            val_conv = _value_converter(field, config, trace)
-            if field.repeated:
-
-                def h_rep_msg(
-                    data, pos, wt, slots, *, idx=idx, sub_mt=sub_mt, val_conv=val_conv
-                ):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    item = Message(sub_mt)
-                    parse_into(item, data[pos : pos + ln])
-                    lst = slots[idx]
-                    if lst is None:
-                        lst = []
-                        slots[idx] = lst
-                    lst.append(val_conv(item))
-                    return pos + ln
-
-                handlers[field.number] = h_rep_msg
-                finalizers.append((idx, lambda v: v if v is not None else []))
-            elif sub_mt.full_name == TIMESTAMP.full_name and (
-                config.timestamp_type in ("timestamp", "long_nanos")
-            ):
-                # Specialized Timestamp submessage: the generic path
-                # builds a Message (allocation + attribute protocol)
-                # per occurrence — ~40% of flat-event decode time. The
-                # two varints parse directly into a [seconds, nanos]
-                # accumulator with the same merge semantics (scalar
-                # subfields last-wins across occurrences, unknown
-                # subfields skipped, int64/int32 sign handling as in
-                # _read_scalar).
-                U64, S64 = 1 << 64, 1 << 63
-
-                def h_ts(data, pos, wt, slots, *, idx=idx, sibs=sibs):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    end = pos + ln
-                    st = slots[idx]
-                    if type(st) is not list:
-                        st = [0, 0]
-                        slots[idx] = st
-                    while pos < end:
-                        tag, pos = _read_varint(data, pos)
-                        fn = tag >> 3
-                        if fn == 1:
-                            raw, pos = _read_varint(data, pos)
-                            st[0] = raw - U64 if raw >= S64 else raw
-                        elif fn == 2:
-                            raw, pos = _read_varint(data, pos)
-                            low = raw & 0xFFFFFFFF
-                            st[1] = (
-                                low - (1 << 32) if low >= (1 << 31) else low
-                            )
-                        else:
-                            pos = _skip(data, pos, tag & 7)
-                    for s in sibs:
-                        slots[s] = None
-                    return end
-
-                handlers[field.number] = h_ts
-                if config.timestamp_type == "long_nanos":
-
-                    def f_ts(v):
-                        if type(v) is not list:
-                            return v
-                        return v[0] * 1_000_000_000 + v[1]
-
-                else:
-                    import datetime as _dt
-
-                    _epoch = _dt.datetime(
-                        1970, 1, 1, tzinfo=_dt.timezone.utc
-                    )
-
-                    def f_ts(v, *, _epoch=_epoch, _td=_dt.timedelta):
-                        if type(v) is not list:
-                            return v
-                        return _epoch + _td(
-                            seconds=v[0], microseconds=v[1] // 1_000
-                        )
-
-                finalizers.append((idx, f_ts))
-            else:
-
-                def h_msg(
-                    data, pos, wt, slots, *, idx=idx, sub_mt=sub_mt, sibs=sibs
-                ):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    acc = slots[idx]
-                    if not isinstance(acc, Message):
-                        acc = Message(sub_mt)
-                        slots[idx] = acc
-                    parse_into(acc, data[pos : pos + ln])
-                    for s in sibs:
-                        slots[s] = None
-                    return pos + ln
-
-                handlers[field.number] = h_msg
-                finalizers.append(
-                    (
-                        idx,
-                        lambda v, *, val_conv=val_conv: (
-                            val_conv(v) if isinstance(v, Message) else v
-                        ),
-                    )
-                )
-        elif field.repeated:
-            kind = field.kind
-            conv = _scalar_converter(field, config)
-            unpacked = kind in (Kind.STRING, Kind.BYTES)
-            reader = _make_scalar_reader(kind)
-
-            def h_rep(
-                data, pos, wt, slots, *, idx=idx, reader=reader, conv=conv,
-                unpacked=unpacked,
-            ):
-                lst = slots[idx]
-                if lst is None:
-                    lst = []
-                    slots[idx] = lst
-                if wt == 2 and not unpacked:  # packed
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    stop = pos + ln
-                    while pos < stop:
-                        v, pos = reader(data, pos)
-                        lst.append(conv(v))
-                    return pos
-                v, pos = reader(data, pos)
-                lst.append(conv(v))
-                return pos
-
-            handlers[field.number] = h_rep
-            finalizers.append((idx, lambda v: v if v is not None else []))
-        else:
-            kind = field.kind
-            conv = _scalar_converter(field, config)
-            if not field.has_presence:
-                init_cells[idx] = conv(field.default_value)
-            reader = _make_scalar_reader(kind)
-            if conv is _conv_identity:
-                # fused read-and-store: no converter call, no kind
-                # dispatch — the hot path for int/float/string fields
-
-                def h_scalar_id(
-                    data, pos, wt, slots, *, idx=idx, reader=reader, sibs=sibs
-                ):
-                    v, pos = reader(data, pos)
-                    slots[idx] = v
-                    for s in sibs:
-                        slots[s] = None
-                    return pos
-
-                handlers[field.number] = h_scalar_id
-            else:
-
-                def h_scalar(
-                    data, pos, wt, slots, *, idx=idx, reader=reader, conv=conv,
-                    sibs=sibs,
-                ):
-                    v, pos = reader(data, pos)
-                    slots[idx] = conv(v)
-                    for s in sibs:
-                        slots[s] = None
-                    return pos
-
-                handlers[field.number] = h_scalar
-
-    def decode_wire(data: bytes) -> tuple:
-        slots = list(init_cells)
-        pos = 0
-        end = len(data)
-        while pos < end:
-            tag, pos = _read_varint(data, pos)
-            h = handlers.get(tag >> 3)
-            if h is None:
-                pos = _skip(data, pos, tag & 7)
-                continue
-            pos = h(data, pos, tag & 7, slots)
-        for idx, fin in finalizers:
-            slots[idx] = fin(slots[idx])
-        return tuple(slots)
-
-    return decode_wire
+    The Message path: :func:`~protarrow_spark.proto.message.parse`
+    into a Message, then the compiled ``row_builder`` converter. It is
+    the semantics oracle the batch kernels are differential-tested
+    against, and the per-batch fallback when they cannot run."""
+    build = row_builder(mtype, config)
+    return lambda data: build(parse(data, mtype))

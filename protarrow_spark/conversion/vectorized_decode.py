@@ -1,9 +1,9 @@
 """Vectorized (numpy) wire DECODE for flat messages.
 
 The symmetric half of :mod:`protarrow_spark.conversion.vectorized`
-(the r8 batch encoder): ``compile_wire_to_row`` walks bytes per row in
-Python — a varint loop, a dict dispatch, and a handler call per field
-occurrence. At 100 TB the executor-side codec IS the conversion
+(the r8 batch encoder): ``compile_wire_to_row`` parses each row into a
+Message in Python, then converts it — a varint loop, a field lookup
+and an attribute store per field occurrence. At 100 TB the executor-side codec IS the conversion
 surface, so this module compiles a BATCH decoder that parses every row
 of an Arrow batch simultaneously, TRANSPOSED: one loop step advances
 every row's cursor past one field occurrence, with the per-step work
@@ -19,7 +19,8 @@ degenerates to one or two groups. Step count ~= field count, not row
 count.
 
 Value-compatibility contract: for every supported message shape the
-decoded cells are IDENTICAL to ``compile_wire_to_row`` (differential-
+decoded cells are IDENTICAL to ``compile_wire_to_row`` — the Message
+path ``row_builder(parse(data))``, the semantics oracle (differential-
 tested in tests/test_vectorized_decode.py over the random matrix, the
 config modes, and a corrupt-bytes fuzz: rows where the row path raises
 must raise here in strict mode and null identically in permissive
@@ -31,10 +32,10 @@ groups of supported members (later-member-wins sibling clearing, r9)
 + MAP fields with scalar keys/values (bounded entry-slice sub-loop,
 r9) + plain NESTED MESSAGE fields to any depth (r9: occurrences
 collect body slices, concatenation == parse_into merge, recursive
-batch decode; nested levels use parse_into's STRICT Timestamp-body
-slicing where the top level keeps h_ts's soft limit). r10 closes the
-final quarter: non-Timestamp WKTs (wrappers/Duration/Date/TimeOfDay/
-Empty — nested-style slice collection, then the sub-decoded columns
+batch decode; every level slices the Timestamp body STRICTLY like
+parse_into, so a subfield that overruns the body is malformed). r10
+closes the final quarter: non-Timestamp WKTs (wrappers/Duration/Date/
+TimeOfDay/Empty — nested-style slice collection, then the sub-decoded columns
 combine into the scalar cell form), REPEATED MESSAGE fields (one
 standalone item slice per occurrence, decoded as a flat item batch),
 MESSAGE-VALUED MAPS (value slices merge per entry by concatenation),
@@ -457,10 +458,6 @@ def compile_wire_to_batch(
     if mtype.full_name in _trace:
         return None  # recursive shapes keep the row path
     trace = _trace + (mtype.full_name,)
-    # NESTED levels mirror parse_into, which hands the Timestamp body a
-    # STRICT slice (reads raise at the slice end); only the TOP level's
-    # specialized h_ts reader has the soft row-end limit.
-    ts_strict = bool(_trace)
     # Shared across the compile tree: (full_name) -> forward cell for
     # the STRICT validator of a recursive type. The cell is registered
     # BEFORE its decoder compiles so self/ancestor references late-bind
@@ -479,10 +476,8 @@ def compile_wire_to_batch(
         cell = registry.get(sub_mt.full_name)
         if cell is None:
             cell = registry[sub_mt.full_name] = {"in_progress": True}
-            # the sentinel ancestor keeps ts_strict True without
-            # tripping the top-of-compile recursion guard
             cell["fn"] = compile_wire_to_batch(
-                sub_mt, config, permissive, ("<strict-root>",), registry
+                sub_mt, config, permissive, (), registry
             )
             cell["in_progress"] = False
             if cell["fn"] is None:
@@ -554,7 +549,7 @@ def compile_wire_to_batch(
             # transposed inner loop, expanded occurrences accumulate
             # (row, value) chunks. Repeated MESSAGES (r10): each
             # occurrence is one standalone item slice (NO merge across
-            # occurrences — h_rep_msg parses each into its own
+            # occurrences — parse_into parses each into its own
             # Message); recursive-typed items keep the row path.
             if field.kind is Kind.MESSAGE:
                 sub_name = field.message.full_name
@@ -593,7 +588,7 @@ def compile_wire_to_batch(
         if field.kind is Kind.MESSAGE:
             sub_name = field.message.full_name
             # recursion (r10): under skip_recursive_messages the row
-            # path PARSES the body (h_msg -> parse_into, full
+            # path PARSES the body (parse_into, full
             # validation) then prunes the converted subtree to ``()``.
             # The strict validator decodes the joined bodies purely for
             # error parity; raise-mode shapes keep the row path.
@@ -761,26 +756,20 @@ def compile_wire_to_batch(
                     fail(m & (verr | oob), "truncated timestamp body")
                     mok = mok & ~oob
                     body_end = np.where(mok, p2 + lni, rowend)
-                    # first occurrence resets [0, 0] (the row path
-                    # allocates st = [0, 0]); later occurrences merge
+                    # first occurrence resets [0, 0] (parse_into starts
+                    # a fresh Timestamp); later occurrences merge
                     first = mok & ~seen[idx]
                     ts_sec[idx][first] = 0
                     ts_nano[idx][first] = 0
                     seen[idx] |= mok
-                    # IMPORTANT: the TOP-level row path's h_ts loop
-                    # condition is ``pos < body_end`` but its reads/
-                    # skips are bounded by the ROW end, and it returns
-                    # body_end regardless — a corrupt subfield may
-                    # overrun the body into the next field's bytes
-                    # without erroring, then the cursor clamps back.
-                    # NESTED levels go through parse_into, which slices
-                    # the ts body STRICTLY. Mirror whichever applies.
-                    ts_limit = body_end if ts_strict else rowend
+                    # parse_into hands the Timestamp body a STRICT
+                    # slice: a subfield read that overruns body_end
+                    # raises rather than taking the next field's bytes
                     tcur = np.where(mok, p2, cur)
                     tact = mok & (tcur < body_end)
                     while tact.any():
                         ttags, tp, terr = _read_varints_at(
-                            buf, tcur, ts_limit, tact
+                            buf, tcur, body_end, tact
                         )
                         fail(tact & terr, "truncated timestamp subfield")
                         tact &= ~terr
@@ -794,7 +783,7 @@ def compile_wire_to_batch(
                             twt = int(ttag) & 7
                             if tfn in (1, 2):
                                 v, tp2, tverr = _read_varints_at(
-                                    buf, tcur, ts_limit, tm
+                                    buf, tcur, body_end, tm
                                 )
                                 fail(tm & tverr, "truncated timestamp value")
                                 tmok = tm & ~tverr
@@ -812,7 +801,7 @@ def compile_wire_to_batch(
                                     ts_nano[idx][tmok] = nano32[tmok]
                             else:
                                 tp2, tserr = _skip_at(
-                                    buf, tcur, ts_limit, tm, twt
+                                    buf, tcur, body_end, tm, twt
                                 )
                                 fail(
                                     tm & tserr,
@@ -845,7 +834,7 @@ def compile_wire_to_batch(
                     cur = np.where(mok, p2 + lni, cur)
                 elif klass == "rep_msg":
                     # one standalone ITEM slice per occurrence (no
-                    # merge — h_rep_msg parses each into its own
+                    # merge — parse_into parses each into its own
                     # Message); stable per-row order restored at
                     # finalize like the scalar repeated chunks
                     ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
@@ -863,8 +852,7 @@ def compile_wire_to_batch(
                 elif klass == "map":
                     # one entry per occurrence: a bounded LEN slice the
                     # row path hands to parse_into (reads bounded by
-                    # the SLICE, unlike the Timestamp body's soft
-                    # limit), then dict-inserts (key, value)
+                    # the SLICE), then dict-inserts (key, value)
                     entry_mt = field.message
                     key_f = entry_mt.fields_by_number[1]
                     val_f = entry_mt.fields_by_number[2]
@@ -1373,7 +1361,7 @@ def compile_wire_to_batch(
                         bodies[i] = bodies[i] + piece if bodies[i] else piece
             if klass == "rec":
                 # validation-only: the row path parses the recursive
-                # subtree (h_msg -> parse_into) then prunes it to ().
+                # subtree (parse_into) then prunes it to ().
                 # Only call the (self-referential) validator when some
                 # body is non-empty — recursion then bottoms out at the
                 # DATA depth, like parse_into's nested parse.
@@ -1469,7 +1457,7 @@ def compile_wire_to_batch(
             if field.is_map:
                 rows_s, kv, vv = map_ready[idx]
                 # never-seen rows finalize to the empty map ({} / []),
-                # like the row path's f_map(None); entries dict-insert
+                # like the row path's empty map; entries dict-insert
                 # in parse order (same-key overwrite keeps the first
                 # position — python dict semantics, both paths)
                 out = [None if bad[i] else {} for i in range(n)]

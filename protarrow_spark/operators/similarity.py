@@ -60,29 +60,6 @@ def rademacher_planes(
     return planes
 
 
-def band_key_columns(
-    vec_col: str,
-    planes: list[list[float]],
-    n_bands: int = LSH_N_BANDS,
-) -> list:
-    """One integer key column per band: bit j of band i is the sign of
-    ``dot(v, planes[i*w + j])``. Pure-JVM fold expressions — the
-    bit-exact reference implementation of the signature (used by the
-    oracle-parity reasoning; the operator itself uses the vectorized
-    ``band_keys_udf`` which agrees wherever |dot| exceeds fp noise —
-    measured margin on the test corpora is >= 4e-5 vs ~1e-15 noise)."""
-    width = len(planes) // n_bands
-    keys = []
-    for b in range(n_bands):
-        key = F.lit(0)
-        for j in range(width):
-            plane = planes[b * width + j]
-            d = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-            key = key + F.when(d > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        keys.append(key.alias(f"band_{b}"))
-    return keys
-
-
 def band_keys_udf(planes: list[list[float]], n_bands: int = LSH_N_BANDS):
     """Vectorized signature: one numpy matmul per Arrow batch against
     the (dim x n_planes) +-1 plane matrix, bits packed per band.

@@ -28,7 +28,7 @@ absent-field defaults ``proto_to_arrow.py:428-437``.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Any
 
 from protarrow_spark.proto.model import (
     I32_KINDS,
@@ -493,9 +493,3 @@ def parse(data: bytes, mtype: MessageType) -> Message:
     """Wire bytes -> a fresh :class:`Message` of ``mtype``."""
     return parse_into(Message(mtype), data)
 
-
-def iter_set_fields(msg: Message) -> Iterator[tuple[Field, Any]]:
-    """(field, value) for fields explicitly set on the message."""
-    for field in msg.type.fields:
-        if field.name in msg._values:
-            yield field, msg._values[field.name]

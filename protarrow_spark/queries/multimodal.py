@@ -1352,51 +1352,6 @@ _THUMB_BW = 2
 _THUMB_MAXB = 64
 
 
-def _thumb_source_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, blob): even ids become GENUINE color
-    4:4:4 JPEGs whose planes are constant per 16x16 block (Y = b,
-    Cb = 255 - b, Cr = (2b) % 256 per text byte); odd ids stay raw
-    text (null path)."""
-    import numpy as np
-    import pandas as pd
-
-    from protarrow_spark.operators import jpeg
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")[:_THUMB_MAXB]
-                if doc_id % 2 == 0:
-                    bh = max(1, -(-len(data) // _THUMB_BW))
-                    grid = np.zeros(bh * _THUMB_BW, dtype=np.uint8)
-                    grid[: len(data)] = np.frombuffer(data, np.uint8)
-                    grid = grid.reshape(bh, _THUMB_BW)
-                    ones = np.ones((16, 16), dtype=np.uint8)
-                    y = np.kron(grid, ones)
-                    cb = np.kron((255 - grid).astype(np.uint8), ones)
-                    cr = np.kron(
-                        ((grid.astype(np.int64) * 2) % 256).astype(np.uint8),
-                        ones,
-                    )
-                    blobs.append(
-                        jpeg.encode_jpeg_color(
-                            y, cb, cr, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY
-                        )
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
-
-
 @query(
     "mm_thumbnail_jpeg",
     oracle=f"""

@@ -315,6 +315,26 @@ def test_corrupt_bytes_strict_raises_like_row_path():
         db(good + [None])  # bytes(None), like the row path
 
 
+def test_timestamp_body_overrun_is_malformed():
+    """A Timestamp subfield that reads past the end of its body is
+    malformed (parse_into slices the body strictly); neither kernel may
+    finish the read with the next field's bytes."""
+    mt = MessageType(
+        "vd.TsOverrun",
+        (Field("id", 1, Kind.INT64), Field("ts", 5, Kind.MESSAGE, message=TIMESTAMP)),
+    )
+    # id=1; ts body is 2 bytes (08 80): a seconds varint cut short at
+    # the body end, continued by the next field's tag byte (10 05)
+    wire = bytes.fromhex("08012a0208801005")
+    with pytest.raises((ValueError, IndexError, struct.error)):
+        compile_wire_to_row(mt, CFG)(wire)
+    with pytest.raises((ValueError, IndexError, struct.error)):
+        compile_wire_to_batch(mt, CFG)([wire])
+    cols, bad = compile_wire_to_batch(mt, CFG, permissive=True)([wire])
+    assert bad[0]
+    assert all(_cell(c, 0) is None for c in cols)
+
+
 def test_unsupported_shapes_return_none():
     # repeated SCALARS decode vectorized since r9; repeated messages r10
     rep = MessageType("vd.R", (Field("xs", 1, Kind.INT64, repeated=True),))
@@ -907,10 +927,9 @@ def test_nested_message_decode_incl_merge():
 
 @pytest.mark.parametrize("seed", [700, 701, 702, 703])
 def test_nested_message_decode_corrupt_permissive(seed):
-    """The nesting-level semantics difference is pinned here: the row
-    path's TOP-level Timestamp reader has a soft body limit, while
-    NESTED levels (parse_into) slice strictly — corrupt bytes must
-    null/raise identically at both depths."""
+    """Timestamp bodies slice strictly at every nesting level, like
+    parse_into — corrupt bytes must null/raise identically at the top
+    level and nested."""
     wires = _mutate(_nested_wires(300, seed), seed)
     wires += [b"\x12\x03\x08", b"\x12\x02\x12\x05"]
     dr = compile_wire_to_row(NESTED_MT, CFG)

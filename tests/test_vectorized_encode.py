@@ -449,68 +449,57 @@ def test_string_non_str_cell_is_unvectorizable_not_repr():
         bp([pd.Series([b"bytes-not-str"], dtype=object)])
 
 
-def test_unvectorizable_retries_then_disables_after_strikes():
-    """_encode_stream retries the vectorized path after an
-    Unvectorizable batch (object dtypes can confine the offending value
-    to one batch) and only disables it after _VEC_MAX_STRIKES
-    consecutive failures (ADVICE r8 low)."""
+def test_unvectorizable_batch_falls_back_then_batch_kernel_resumes():
+    """A batch that raises Unvectorizable goes down the row kernel, and
+    the batch kernel runs again on the next batch (object dtypes can
+    confine the offending value to one batch) — for both directions of
+    the per-batch codec loop."""
     from protarrow_spark.conversion.distributed import (
-        _VEC_MAX_STRIKES,
-        _encode_stream,
+        _decode_cells,
+        _encode_cells,
     )
     from protarrow_spark.conversion.vectorized import Unvectorizable
 
     calls = {"vec": 0, "row": 0}
 
-    def fake_batch(cols):
+    def fake_encode_batch(cols):
         calls["vec"] += 1
         if cols[0].iloc[0] == "poison":
             raise Unvectorizable("poison batch")
         return [b"v"] * len(cols[0])
 
-    def fake_rowwise(batch, kept):
+    def fake_encode_row(rec):
         calls["row"] += 1
-        return pd.DataFrame({"proto": [b"r"] * len(batch["s"])})
-
-    def mk(tag):
-        return pd.DataFrame({"s": [tag, tag]})
+        return b"r"
 
     # one poison batch mid-stream: vectorized resumes on the next batch
-    out = list(
-        _encode_stream(
-            iter([mk("a"), mk("poison"), mk("b")]),
-            fake_batch,
-            fake_rowwise,
-            field_names=["s"],
-            keep=[],
-            out_names=["proto"],
-            output_col="proto",
-            permissive=False,
+    out = [
+        _encode_cells(
+            fake_encode_batch, fake_encode_row, [pd.Series([tag, tag])], False
         )
-    )
-    assert [o["proto"].iloc[0] for o in out] == [b"v", b"r", b"v"]
-    assert calls == {"vec": 3, "row": 1}
+        for tag in ("a", "poison", "b")
+    ]
+    assert [cells[0] for cells in out] == [b"v", b"r", b"v"]
+    assert calls == {"vec": 3, "row": 2}
 
-    # _VEC_MAX_STRIKES consecutive poisons: vectorized disabled for the
-    # rest of the partition — later healthy batches go row-wise without
-    # paying the failed precompute again
     calls = {"vec": 0, "row": 0}
-    stream = [mk("poison")] * _VEC_MAX_STRIKES + [mk("c"), mk("d")]
-    out = list(
-        _encode_stream(
-            iter(stream),
-            fake_batch,
-            fake_rowwise,
-            field_names=["s"],
-            keep=[],
-            out_names=["proto"],
-            output_col="proto",
-            permissive=False,
-        )
-    )
-    assert all(o["proto"].iloc[0] == b"r" for o in out)
-    assert calls["vec"] == _VEC_MAX_STRIKES  # never retried post-disable
-    assert calls["row"] == len(stream)
+
+    def fake_decode_batch(wires):
+        calls["vec"] += 1
+        if wires[0] == b"poison":
+            raise Unvectorizable("poison batch")
+        return [["v"] * len(wires)], None
+
+    def fake_decode_row(data):
+        calls["row"] += 1
+        return ("r",)
+
+    out = [
+        _decode_cells(fake_decode_batch, fake_decode_row, [w, w], 1, False)
+        for w in (b"a", b"poison", b"b")
+    ]
+    assert [cols[0][0] for cols in out] == ["v", "r", "v"]
+    assert calls == {"vec": 3, "row": 2}
 
 
 def test_messages_to_dataframe_verify_schema_hatch(spark):
